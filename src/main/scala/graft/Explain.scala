@@ -11,17 +11,13 @@ object Explain {
     val only = args.lift(1).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val builder = SparkSession.builder()
       .master("local[4]")
+      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", TempDirs.scratch("graft-warehouse-"))
     Tables.sessionConf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
-    graft.expressions.VectorExpressions.register(spark)
-    graft.expressions.TextExpressions.register(spark)
-    graft.expressions.KllExpressions.register(spark)
-    spark.experimental.extraOptimizations ++= Seq(graft.expressions.RewriteDotProduct, graft.expressions.RewriteRollingHash, graft.plans.RewriteGroupedTopK)
-    spark.experimental.extraStrategies ++= Seq(graft.plans.GroupedTopKStrategy)
     spark.sparkContext.setLogLevel("ERROR")
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if only.forall(_.contains(name))) {

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerTaskStart}
 
 /** Shared task-metrics listener for the measurement harnesses (Bench
-  * metrics mode, GraphBucketProbe, ScaleProbe, ClusterScaleProbe) —
-  * previously four near-identical copies tracking different metric
+  * metrics mode, ScaleProbe) — previously near-identical copies in
+  * every harness, tracking different metric
   * subsets, which made "spill" mean different things across SCALE.md
   * rows. Disk and memory spill are tracked SEPARATELY everywhere now:
   * memoryBytesSpilled is the deserialized in-memory size at spill

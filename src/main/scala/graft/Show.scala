@@ -13,16 +13,13 @@ object Show {
     val n = args.lift(2).map(_.toInt).getOrElse(20)
     val builder = SparkSession.builder()
       .master("local[8]")
+      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", TempDirs.scratch("graft-warehouse-"))
     Tables.sessionConf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
-    graft.expressions.VectorExpressions.register(spark)
-    graft.expressions.TextExpressions.register(spark)
-    graft.expressions.KllExpressions.register(spark)
-    spark.experimental.extraOptimizations ++= Seq(graft.expressions.RewriteDotProduct)
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.queries(name)(spark, sfDir)
     val t0 = System.nanoTime()

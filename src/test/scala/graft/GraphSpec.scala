@@ -633,12 +633,26 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     // ADVICE r16: a negative weight silently changes the semantics
     // (min over walks, not paths) — must error, not mis-route.
     val edges = Seq((1L, 2L, 3L), (2L, 3L, -1L)).toDF("src", "dst", "w")
-    val e = intercept[Exception] {
-      Graph.sssp(edges, Seq(1L).toDF("node"), rounds = 3).collect()
-    }
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
-    assert(msgs(e).exists(_.contains("negative edge weight")), s"wrong error: $e")
+    def assertGuard(label: String)(run: => Unit): Unit = {
+      val e = intercept[Exception](run)
+      assert(msgs(e).exists(_.contains("negative edge weight")),
+        s"$label: wrong error: $e")
+    }
+    assertGuard("reachable") {
+      Graph.sssp(edges, Seq(1L).toDF("node"), rounds = 3).collect()
+    }
+    // the guard is a precondition on the edge list, not a side effect
+    // of a relaxation reading w: it must fire with no round run at all
+    // and on a negative edge no seed can reach
+    assertGuard("rounds = 0") {
+      Graph.sssp(edges, Seq(1L).toDF("node"), rounds = 0).collect()
+    }
+    assertGuard("unreachable") {
+      Graph.sssp(Seq((1L, 2L, 3L), (7L, 8L, -1L)).toDF("src", "dst", "w"),
+        Seq(1L).toDF("node"), rounds = 3).collect()
+    }
   }
 
   test("sssp: bounded-hop semantics — round r holds the exact best ≤r-edge path") {
@@ -1261,5 +1275,22 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
       Graph.articulation(edges, Seq(2L, 3L).toDF("node"), maxHops = 10))
     retainedAfter("deterministicWalks")(
       Graph.deterministicWalks(edges, length = 5))
+    // the ops whose returned frame reads the loop's final state
+    // directly: every superseded round must have been released
+    retainedAfter("kCore")(Graph.kCore(
+      edges.select(col("src").as("u"), col("dst").as("v")), k = 2))
+    retainedAfter("ccStar")(Graph.ccStar(
+      edges.select(col("src").as("u"), col("dst").as("v"))))
+    val weighted = edges.withColumn("w", col("src") + 1L)
+    retainedAfter("sssp")(Graph.sssp(weighted, seeds, rounds = 10))
+    val timed = edges.withColumn("t", col("src") * 10L + col("dst"))
+    retainedAfter("earliestArrival")(
+      Graph.earliestArrival(timed, seeds, startT = 0L, rounds = 10))
+    retainedAfter("latestDeparture")(Graph.latestDeparture(timed,
+      Seq(6L).toDF("node"), deadline = 100L, rounds = 10))
+    retainedAfter("fastestJourney")(
+      Graph.fastestJourney(timed, seeds, rounds = 10))
+    retainedAfter("shortestJourney")(
+      Graph.shortestJourney(timed, seeds, startT = 0L, rounds = 10))
   }
 }

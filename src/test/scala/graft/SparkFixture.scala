@@ -22,7 +22,8 @@ object TestSpark {
     Tables.sessionConf.foreach { case (k, v) => builder.config(k, v) }
     val s = builder.getOrCreate()
     // native function surface (graft_dot, graft_band_keys) — same
-    // registration Verify/Bench/Show/Explain apply; ops.Similarity's
+    // registration Verify/Bench apply (the other mains install it via
+    // GraftExtensions); ops.Similarity's
     // sketch path resolves graft_band_keys by name.
     graft.expressions.VectorExpressions.register(s)
     graft.expressions.TextExpressions.register(s)
